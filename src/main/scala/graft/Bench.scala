@@ -71,10 +71,13 @@ object Bench {
   private def fmt(v: Double, prec: Int): String =
     s"%.${prec}f".formatLocal(java.util.Locale.ROOT, v)
 
-  /** The most-expensive-first subset of `pairs` whose rendered map
-    * keeps the final stdout line within `budget` chars (`overhead` =
-    * the line's length with an empty map). Pure so BenchLineSpec pins
-    * the budget behavior; see main for why the budget exists.
+  /** A greedy, most-expensive-first fill of the rendered map within
+    * `budget` chars for the final stdout line (`overhead` = the line's
+    * length with an empty map): a pair that does not fit is skipped
+    * and the fill goes on, so a cheaper key with a shorter name can
+    * still follow — not a contiguous top-N prefix. Pure so
+    * BenchLineSpec pins the budget behavior; see main for why the
+    * budget exists.
     */
   private[graft] def inlineTopPairs(pairs: Seq[(String, Double)],
       overhead: Int, budget: Int, prec: Int = 2): String = {

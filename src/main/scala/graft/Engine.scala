@@ -187,11 +187,15 @@ object Engine {
     * the expression fails LOUDLY instead — the documented retune is
     * the two-column key. The check is two shifts per row (arithmetic
     * shift maps negatives to -1, so it also rejects them), noise
-    * next to the shuffle the narrow key exists to shrink.
+    * next to the shuffle the narrow key exists to shrink. Both inputs
+    * are widened to long first: on int columns Spark masks the shift
+    * count to 5 bits, which would turn the 32-bit shifts into no-ops.
     */
-  private[graft] def packPair(hi: org.apache.spark.sql.Column,
-      lo: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+  private[graft] def packPair(hi0: org.apache.spark.sql.Column,
+      lo0: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
+    val hi = hi0.cast("long")
+    val lo = lo0.cast("long")
     when(shiftright(hi, 31) === 0 && shiftright(lo, 32) === 0,
       shiftleft(hi, 32) + lo)
       .otherwise(raise_error(lit(

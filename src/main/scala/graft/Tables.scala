@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Typed loaders for the test-data star schema. All operators go
   * through these so filters/projections stay declarative and reach
@@ -11,8 +13,65 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Reads one table, inferring its schema only the first time a file
+    * layout is seen. Spark's schema inference launches a Spark job to
+    * read a footer on every `spark.read.parquet`, even for a layout it
+    * has already read; a user-specified schema skips that job and
+    * plans the identical scan. Key: the qualified path, the layout
+    * [[fingerprint]] (a rewrite is an automatic miss — the same
+    * layout-level contract as the memos) and the session's explicitly
+    * set parquet confs, which change the inferred types ([[events]]'
+    * `nanosAsLong`). A read that fails — missing path, empty directory
+    * — raises Spark's own error and caches nothing.
+    */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val key = schemaKey(spark, path)
+    key.flatMap(cached) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(k => schemas.synchronized(schemas.put(k, df.schema)))
+        df
+    }
+  }
+
+  /** Inferred schemas by [[schemaKey]], least recently used evicted
+    * past [[MaxSchemas]]. Holds no rows and no frames — like Spark's
+    * catalog relations, it outlives `FrameMemo.clearAllMemos`.
+    */
+  private val MaxSchemas = 256
+  private val schemas =
+    new java.util.LinkedHashMap[String, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, StructType]): Boolean =
+        size > MaxSchemas
+    }
+
+  private def cached(key: String): Option[StructType] =
+    schemas.synchronized(Option(schemas.get(key)))
+
+  /** The schema [[load]] would reuse for this table now, if any. */
+  private[graft] def cachedSchema(
+      s: SparkSession, d: String, name: String): Option[StructType] =
+    schemaKey(s, s"$d/$name.parquet").flatMap(cached)
+
+  /** None when the path cannot be listed: the read then fails in Spark. */
+  private def schemaKey(s: SparkSession, path: String): Option[String] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val listing =
+      try Some(fs.listStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    listing.map { files =>
+      val confs = s.conf.getAll.toSeq
+        .filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") ||
+            k.startsWith("spark.sql.legacy.parquet.") }
+        .sorted.mkString(",")
+      s"${fs.makeQualified(p)}|${layout(files)}|$confs"
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
@@ -66,9 +125,12 @@ object Tables {
     * contract.
     */
   def fingerprint(s: SparkSession, d: String, name: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$d/$name.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(path).filter(_.isFile)
+    val path = new Path(s"$d/$name.parquet")
+    layout(path.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(path))
+  }
+
+  private def layout(listing: Array[FileStatus]): String = {
+    val files = listing.filter(_.isFile)
     s"${files.length}:${files.map(_.getLen).sum}:" +
       s"${if (files.isEmpty) 0L else files.map(_.getModificationTime).max}"
   }

@@ -492,21 +492,20 @@ object Itemsets {
     // the id dictionary: dense lexicographic ranks over the FREQUENT
     // vocabulary (items only ever enter levels through l1, so the
     // dictionary covers every id the loop can see); the global window
-    // runs over a vocabulary-sized frame, never data rows
+    // runs over a vocabulary-sized frame, never data rows. Loud guard
+    // on the 16-bit slot bound (the packPair posture) where ids are
+    // assigned, so every depth — 1 included — is covered: past
+    // MaxDictId the packing would silently merge sets
     val dict = l1s.select(col("it"))
       .withColumn("id", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(col("it")))
         .cast("long"))
+      .withColumn("id", when(col("id") <= MaxDictId, col("id"))
+        .otherwise(expr(
+          s"raise_error('f05: frequent vocabulary exceeds $MaxDictId" +
+            " ids - retune to array<int> level keys')").cast("long")))
       .ckpt(true)
-    // loud in-flight guard on the 16-bit slot bound (the packPair
-    // posture): past MaxDictId the packing would silently merge sets
-    val fb = baskets.join(broadcast(dict), "it")
-      .select(col("o"),
-        when(col("id") <= MaxDictId, col("id"))
-          .otherwise(expr(
-            s"raise_error('f05: frequent vocabulary exceeds $MaxDictId" +
-              " ids - retune to array<int> level keys')").cast("long"))
-          .as("id"))
+    val fb = baskets.join(broadcast(dict), "it").select(col("o"), col("id"))
     var occ = fb.select(col("o"), col("id").as("p"))
     var lk = l1s.join(broadcast(dict), "it")
       .select(col("id").as("p"), col("support"))

@@ -45,6 +45,22 @@ class EngineSpec extends AnyFunSuite {
     intercept[Exception](packs(-1L, 0L))
   }
 
+  test("packPair widens int columns: same keys as long inputs, loud past the bound") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val pairs = Seq((0, 0), (1, 2), (Int.MaxValue, Int.MaxValue), (7, 65536))
+    def packed(df: org.apache.spark.sql.DataFrame) =
+      df.select(Engine.packPair(col("hi"), col("lo"))).collect().map(_.getLong(0)).toSeq
+    val ints = pairs.toDF("hi", "lo")
+    val longs = pairs.map { case (h, l) => (h.toLong, l.toLong) }.toDF("hi", "lo")
+    assert(packed(ints) == packed(longs))
+    assert(packed(ints) == pairs.map { case (h, l) => (h.toLong << 32) + l })
+    // negatives are out of range on either side, whatever the width
+    intercept[Exception](packed(Seq((-1, 0)).toDF("hi", "lo")))
+    intercept[Exception](packed(Seq((0, -1)).toDF("hi", "lo")))
+  }
+
   test("dirBytes sums regular files recursively, 0 for missing dirs") {
     val d = java.nio.file.Files.createTempDirectory("graft-dirbytes")
     java.nio.file.Files.write(d.resolve("a.bin"), new Array[Byte](1000))

@@ -105,6 +105,26 @@ class ItemsetsSpec extends AnyFunSuite {
     assert(sigma >= 2)
   }
 
+  test("itemset dictionary past 32767 ids fails loudly, depth 1 included") {
+    import spark.implicits._
+    // 32800 brands, one part each, 20 per basket: 1640 baskets put
+    // the depth floor at 1, so every brand is frequent
+    val n = 32800
+    val d = java.nio.file.Files.createTempDirectory("graft-dict-bound").toString
+    (0 until n).map(i => (i.toLong, f"b$i%05d")).toDF("p_partkey", "p_brand")
+      .write.parquet(s"$d/part.parquet")
+    (0 until n).map(i => ((i / 20).toLong, i.toLong)).toDF("l_orderkey", "l_partkey")
+      .write.parquet(s"$d/lineitem.parquet")
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).toSeq
+    for (depth <- Seq(1, 2)) {
+      val e = intercept[Exception](Itemsets.itemsetsToDepth(spark, d, depth).collect())
+      assert(messages(e).exists(_.contains("frequent vocabulary exceeds 32767")),
+        s"depth $depth: ${messages(e).mkString(" / ")}")
+    }
+  }
+
   test("f05 depth-4 itemsets equal brute-force enumeration at sf0.001; " +
     "downward closure holds; every level non-vacuous") {
     val byBasket = Tables.lineitem(spark, sfDir)

@@ -1021,4 +1021,30 @@ class RelationalSpec extends AnyFunSuite {
       }
     } finally spark.conf.unset(graft.Sums.TwoLevelConf)
   }
+
+  test("q01, q03, q05, q24 plan identically on cold and cached table schemas") {
+    // a private copy of the tables per key, so its first read is cold
+    def freshCopy(): String = {
+      val src = java.nio.file.Paths.get(sfDir)
+      val dst = java.nio.file.Files.createTempDirectory("graft-schema-cache")
+      val s = java.nio.file.Files.walk(src)
+      try s.forEach { p: java.nio.file.Path =>
+        val t = dst.resolve(src.relativize(p).toString)
+        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+        else java.nio.file.Files.copy(p, t)
+      } finally s.close()
+      dst.toString
+    }
+    def plan(key: String, d: String): String =
+      SparkEntry.queries(key)(spark, d).queryExecution.executedPlan.toString
+        .replaceAll("#\\d+L?", "#").replaceAll("plan_id=\\d+", "plan_id=")
+    Seq("q01_pricing_summary", "q03_join_agg_topk", "q05_multiway_join",
+        "q24_cube").foreach { key =>
+      val d = freshCopy()
+      assert(Tables.cachedSchema(spark, d, "lineitem").isEmpty)
+      val cold = plan(key, d)
+      assert(Tables.cachedSchema(spark, d, "lineitem").isDefined)
+      assert(plan(key, d) == cold, s"$key: the cached read planned differently")
+    }
+  }
 }
